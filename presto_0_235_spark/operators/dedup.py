@@ -31,6 +31,9 @@ Scale notes (100 TB corpus, 1000 executors):
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -55,6 +58,23 @@ LSH_MAX_BUCKET = 64
 # text normalization + shingling
 
 
+def bind_once(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(v)`` with ``value`` evaluated once per row.
+
+    Neither engine shares common subexpressions inside higher-order
+    lambdas, so a per-row value referenced from a per-element lambda
+    is recomputed for every element. Mapping ``body`` over a
+    one-element array binds the value to a lambda variable instead;
+    references to it are then plain variable reads.
+    """
+    return F.transform(F.array(value), body)[0]
+
+
+def sql_bind_once(value: str, var: str, body: str) -> str:
+    """DuckDB twin of `bind_once`: ``body`` reads ``value`` as ``var``."""
+    return f"list_transform([{value}], {var} -> {body})[1]"
+
+
 def normalized_text(col: Column | str) -> Column:
     """lower + collapse whitespace + trim (canonical dedup form)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -70,22 +90,29 @@ def sql_normalized_text(expr: str) -> str:
 def word_shingles(col: Column | str, n: int = SHINGLE_WORDS) -> Column:
     """Distinct n-word shingles of the normalized text.
 
-    Pure expression: split -> sliding window via sequence+slice ->
-    distinct. Distinctness matters for Jaccard/minhash set semantics.
+    Pure expression: split (once per row, see `bind_once`) -> sliding
+    window via sequence+slice -> distinct. Distinctness matters for
+    Jaccard/minhash set semantics.
     """
-    words = F.split(normalized_text(col), " ")
-    starts = F.sequence(F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(starts, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
-    )
+
+    def shingles(words: Column) -> Column:
+        starts = F.sequence(
+            F.lit(1), F.greatest(F.size(words) - (n - 1), F.lit(1))
+        )
+        return F.array_distinct(
+            F.transform(starts, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
+        )
+
+    return bind_once(F.split(normalized_text(col), " "), shingles)
 
 
 def sql_word_shingles(expr: str, n: int = SHINGLE_WORDS) -> str:
-    words = f"string_split({sql_normalized_text(expr)}, ' ')"
-    return (
+    return sql_bind_once(
+        f"string_split({sql_normalized_text(expr)}, ' ')",
+        "w",
         f"list_distinct(list_transform("
-        f"generate_series(1, greatest(len({words}) - {n - 1}, 1)), "
-        f"i -> array_to_string(({words})[i:i+{n - 1}], ' ')))"
+        f"generate_series(1, greatest(len(w) - {n - 1}, 1)), "
+        f"i -> array_to_string(w[i:i+{n - 1}], ' ')))",
     )
 
 
@@ -110,103 +137,127 @@ def sql_jaccard(a: str, b: str) -> str:
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH
+#
+# Signature slot i is min over a doc's shingles of the affine
+# permutation h_i(x) = (a_i*x + b_i) mod MINHASH_PRIME, where x is the
+# shingle's 31-bit hash (Broder et al., "Min-wise independent
+# permutations", STOC 1998). x < 2^31 and a_i, b_i < 2^31, so every
+# intermediate is below 2^62: exact bigint arithmetic on both engines,
+# ANSI overflow checks included. A band key packs its two minhashes
+# into one bigint, min_2b * 2^31 + min_2b+1 (< 2^62, and invertible).
+MINHASH_PRIME = (1 << 31) - 1  # also the 31-bit mask: all ones
 
 
-def minhash_signature(shingles: Column, k: int = MINHASH_K) -> Column:
-    """Array of K min-wise hashes: sig[i] = min over shingles of
-    md5(i || '|' || shingle).
+def _affine_perm(i: int) -> tuple[int, int]:
+    """Fixed (a_i, b_i) for slot i, a_i in [1, p-1], b_i in [0, p-1]."""
+    d = hashlib.md5(f"minhash|{i}".encode()).digest()
+    a = int.from_bytes(d[:4], "big") % (MINHASH_PRIME - 1) + 1
+    b = int.from_bytes(d[4:8], "big") % MINHASH_PRIME
+    return a, b
 
-    md5-hex string min is a valid min-wise hash family (seeded by the
-    prefix), computable identically on any engine with md5 — which is
-    what makes the DuckDB differential check possible. JVM-side only.
 
-    Cheaper families were measured at sf0.1 and REJECTED (round 6):
-      - Kirsch-Mitzenmacher double hashing (2 md5 bases, h0 + i*h1):
-        the min for large i is dominated by min-h1, collapsing K
-        permutations to ~2 effective ones — band recall on a
-        jaccard-0.6 pair drops from ~93% to ~40%. Wrong, not slow.
-      - 32-bit md5 windows (3 md5s sliced into 12 independent keys):
-        statistically correct (agreement variance matches binomial),
-        but higher-order lambdas are interpreted, not codegen'd, so
-        the shared md5 is NOT common-subexpression-eliminated across
-        windows; with the extra conv/substring it measured 2.57 s vs
-        1.42 s for this form, and a fold-based variant that does bind
-        the digest once measured 1.89 s. K plain md5 string-mins win.
-    """
-    # NB: helper factory, not `lambda s, i=i: ...` — pyspark reads the
-    # lambda's arity from its signature, so a defaulted second param
-    # turns it into an (element, index) lambda and binds the index
-    # Column over the seed.
-    def seed_min(i: int) -> Column:
-        prefix = F.lit(f"{i}|")
-        return F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.concat(prefix, s)))
-        )
+MINHASH_PERMS = tuple(_affine_perm(i) for i in range(MINHASH_K))
 
-    return F.array(*[seed_min(i) for i in range(k)])
+
+def shingle_hashes(shingles: Column) -> Column:
+    """The 31-bit hash x of every shingle: `_token_hash32` masked to
+    31 bits. This is the only md5 of the MinHash path, once per
+    shingle; every permutation reads the resulting array."""
+    return F.transform(
+        shingles, lambda s: _token_hash32(s).bitwiseAND(F.lit(MINHASH_PRIME))
+    )
+
+
+def _affine_sql(i: int, x: str) -> str:
+    """h_i(x), spelled the same in Spark SQL and DuckDB."""
+    a, b = MINHASH_PERMS[i]
+    return f"({a} * {x} + {b}) % {MINHASH_PRIME}"
+
+
+def _pack_band_sql(mins: list[str]) -> str:
+    """One bigint band key from the band's minhashes (engine-neutral)."""
+    assert len(mins) <= 2, "a bigint band key holds at most two 31-bit minhashes"
+    return f" * {1 << 31} + ".join(mins)
 
 
 def sql_minhash_signature(shingles: str, k: int = MINHASH_K) -> str:
+    """DuckDB spelling: the K-slot signature array of a shingle array.
+    The hash array is bound once (`sql_bind_once`), so each shingle is
+    md5-hashed once, not once per slot."""
+    hashes = (
+        f"list_transform({shingles}, "
+        f"s -> {sql_token_hash32('s')} & {MINHASH_PRIME})"
+    )
     mins = ", ".join(
-        f"list_min(list_transform({shingles}, s -> md5('{i}|' || s)))"
+        f"list_min(list_transform(h, x -> {_affine_sql(i, 'x')}))"
         for i in range(k)
     )
-    return f"[{mins}]"
-
-
-def lsh_band_keys(
-    sig: Column, bands: int = LSH_BANDS, rows: int = LSH_ROWS
-) -> Column:
-    """Array of B band keys: band b hashes rows [b*R, b*R+R) of the
-    signature. Two docs collide on band b iff those R minhashes all
-    match — the classic (jac^R per band) LSH amplification."""
-    return F.array(
-        *[
-            F.md5(F.concat_ws("|", *[sig[b * rows + j] for j in range(rows)]))
-            for b in range(bands)
-        ]
-    )
+    return sql_bind_once(hashes, "h", f"[{mins}]")
 
 
 def sql_lsh_band_key(sig: str, band: int, rows: int = LSH_ROWS) -> str:
     # 1-based list indexing in DuckDB.
-    parts = " || '|' || ".join(f"{sig}[{band * rows + j + 1}]" for j in range(rows))
-    return f"md5({parts})"
-
-
-def spark_minhash_min_sql(shingles: str, i: int) -> str:
-    """Spark-SQL spelling of one minhash min (seed ``i``) — the same
-    expression `minhash_signature` builds via the Column API."""
-    return f"array_min(transform({shingles}, s -> md5(concat('{i}|', s))))"
+    return _pack_band_sql([f"{sig}[{band * rows + j + 1}]" for j in range(rows)])
 
 
 def spark_lsh_band_keys_sql(
-    shingles: str, bands: int = LSH_BANDS, rows: int = LSH_ROWS
+    hashes: str, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> str:
-    """Spark-SQL spelling of the band-key array, as ONE parseable
-    expression (single Py4J round trip; the Column spelling costs
-    ~400 driver round trips per build — guide §5).
+    """Spark-SQL spelling of the band-key array over a `shingle_hashes`
+    column, as ONE parseable expression (a single Py4J round trip; a
+    Column-API spelling costs hundreds per build). Two docs collide on
+    band b iff its R minhashes all match — the classic (J^R per band)
+    LSH amplification.
 
-    Emits the post-optimizer form directly: the Column path builds
-    `array(min_0..min_K)[idx]` per band row and Catalyst's
-    SimplifyExtractValueOps folds each subscript to its element, so
-    both spellings reach the IDENTICAL optimized plan (pinned in
-    tests/test_operators.py)."""
-    # The Column path indexes a fixed MINHASH_K-element signature —
-    # out-of-range subscripts there became NULL band keys, while this
-    # spelling would happily derive seeds past K. Pin the implicit
-    # bound so the two spellings cannot silently diverge.
+    Why this family keeps the recall that cheaper families lost (two
+    were measured at sf0.1 and rejected earlier):
+      - Kirsch-Mitzenmacher double hashing (h0 + i*h1 from 2 md5s) is
+        not K permutations: for large i the order is h1's order, so
+        every slot picks min-h1's shingle and K slots collapse to ~2
+        effective ones — band recall on a Jaccard-0.6 pair fell from
+        ~93% to ~40%. Each affine h_i reduces a_i*x (about 2^30
+        multiples of p) mod p with its own (a_i, b_i), so the slot's
+        order, and its argmin, is drawn afresh: per-slot agreement is
+        ~J and the agreement count fits Binomial(K, J), which is what
+        the 1-(1-J^R)^B band recall assumes (both pinned in
+        tests/test_quality.py).
+      - 32-bit md5 windows were statistically fine but slow: lambdas
+        are interpreted, so the shared md5 was recomputed per window.
+        Here the md5 runs once per shingle, in its own projected
+        column (`shingle_hashes`), and a slot costs one multiply-add
+        per shingle.
+    """
     assert bands * rows <= MINHASH_K, (
         f"bands*rows ({bands}*{rows}) exceeds MINHASH_K ({MINHASH_K})")
     keys = ", ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(
-            spark_minhash_min_sql(shingles, b * rows + j) for j in range(rows)
-        )
-        + "))"
+        _pack_band_sql([
+            f"array_min(transform({hashes}, x -> {_affine_sql(b * rows + j, 'x')}))"
+            for j in range(rows)
+        ])
         for b in range(bands)
     )
     return f"array({keys})"
+
+
+def _lsh_banded(
+    docs: DataFrame, id_col: str, shingle_col: str, bands: int, rows: int,
+    out: str | None = None,
+) -> DataFrame:
+    """(id, band_id, band_key): B rows per doc. The hash array is its
+    own projection under the band Generate: every slot's lambda reads
+    it, and inlining it would md5 each shingle K times (pinned in
+    tests/test_operators.py)."""
+    out = out or id_col
+    hashed = docs.select(
+        F.col(id_col).alias(out),
+        shingle_hashes(F.col(shingle_col)).alias("__h"),
+    )
+    return hashed.select(
+        out,
+        F.posexplode(
+            F.expr(spark_lsh_band_keys_sql("__h", bands, rows))
+        ).alias("band_id", "band_key"),
+    )
 
 
 def lsh_candidate_pairs(
@@ -230,7 +281,8 @@ def lsh_candidate_pairs(
     highest-similarity) pairs. Consumers that RETURN the pair set
     keep the default.
 
-    One narrow projection computes signatures, posexplode emits B
+    One narrow projection hashes each shingle once, the band Generate
+    computes the signature slots from those hashes, posexplode emits B
     (band_id, band_key) rows per doc, and the self-join shuffles on the
     uniform (band_id, band_key) composite — the only shuffle in the
     pipeline, O(n*B) rows. distinct() collapses multi-band collisions.
@@ -250,9 +302,9 @@ def lsh_candidate_pairs(
     transform, <= C(max_bucket, 2) pairs per bucket). Versus the
     previous window-cap + self-join this removes the window SORT,
     the second scan of the banded table (and the persist that fed
-    it), and the join exchange — the minhash signatures (K md5
-    passes over every shingle, the dominant compute) are evaluated
-    exactly once, and the only shuffles left are the banded groupBy
+    it), and the join exchange — the minhash signatures (K
+    permutation passes over every shingle's hash, the dominant
+    compute) are evaluated exactly once, and the only shuffles left are the banded groupBy
     and the final distinct. Pair sets are identical: ids are unique
     within a bucket (one row per doc per band), so value-ordered
     pairs == the join's id1 < id2 pairs, and the size filter sees
@@ -262,14 +314,7 @@ def lsh_candidate_pairs(
     degenerate bucket's collect_list would be unbounded driver-less
     state in one aggregation buffer, while the join only streams.
     """
-    # Single-expr spelling of signatures + band keys: same optimized
-    # plan as the Column form (pinned), one driver round trip.
-    banded = docs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.expr(spark_lsh_band_keys_sql(shingle_col, bands, rows))
-        ).alias("band_id", "band_key"),
-    )
+    banded = _lsh_banded(docs, id_col, shingle_col, bands, rows)
     if max_bucket is not None:
         buckets = (
             banded.groupBy("band_id", "band_key")
@@ -339,16 +384,7 @@ def lsh_incremental_pairs(
     total row count exceeds the cap, exactly what the window count
     filtered.
     """
-
-    def banded(docs: DataFrame, out: str) -> DataFrame:
-        return docs.select(
-            F.col(id_col).alias(out),
-            F.posexplode(
-                F.expr(spark_lsh_band_keys_sql(shingle_col, bands, rows))
-            ).alias("band_id", "band_key"),
-        )
-
-    old_b = banded(old_docs, "id_old")
+    old_b = _lsh_banded(old_docs, id_col, shingle_col, bands, rows, "id_old")
     if max_bucket is not None:
         old_b = old_b.persist()
         oversized = (
@@ -360,7 +396,7 @@ def lsh_incremental_pairs(
         old_b = old_b.join(
             oversized, ["band_id", "band_key"], "left_anti"
         )
-    new_b = banded(new_docs, "id_new")
+    new_b = _lsh_banded(new_docs, id_col, shingle_col, bands, rows, "id_new")
     return (
         new_b.join(old_b, ["band_id", "band_key"])
         .select("id_new", "id_old")
@@ -391,9 +427,10 @@ def simhash(tokens_hashes: Column, bits: int = SIMHASH_BITS) -> Column:
     hash array; precompute the hash array once per row (withColumn)
     so md5 runs once per token, not per bit.
     """
+    # NB: helper factory, not `lambda acc, h, b=b: ...` — pyspark reads
+    # the lambda's arity from its signature, so a defaulted extra param
+    # changes which lambda form it builds and binds a Column over b.
     def bit_vote(b: int) -> Column:
-        # b closes over this call's scope (2-ary lambda — see
-        # minhash_signature note on pyspark lambda arity).
         return F.aggregate(
             tokens_hashes,
             F.lit(0).cast("long"),

@@ -139,7 +139,7 @@ def lsh_bucket(vec: Column, planes: int = ANN_PLANES) -> Column:
     high probability (random hyperplane LSH, Charikar 2002)."""
     def projection(p: int) -> Column:
         # helper factory: p must close over its own scope (pyspark
-        # lambda arity — see dedup.minhash_signature note).
+        # lambda arity — see dedup.simhash note).
         weights = F.transform(
             F.sequence(F.lit(1), F.size(vec)), lambda i: _plane_weight(p, i)
         )

@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from presto_0_235_spark.operators.dedup import normalized_text, sql_normalized_text
+from presto_0_235_spark.operators.dedup import (
+    bind_once,
+    normalized_text,
+    sql_bind_once,
+    sql_normalized_text,
+)
 
 # Tiny per-language stopword seeds for the n-gram/stopword language-ID
 # heuristic. (A production list is larger; the operator shape — token
@@ -82,27 +87,32 @@ def sql_lang_id(tokens: str) -> str:
 
 def rolling_fingerprint(col: Column | str, prefix: int = FP_PREFIX) -> Column:
     """Polynomial rolling hash over the first ``prefix`` chars:
-    fold(acc*31 + codepoint) mod 2^31-1 — integer-exact on any engine."""
+    fold(acc*31 + codepoint) mod 2^31-1 — integer-exact on any engine.
+    The prefix is cut once per row (`bind_once`), not per character."""
     c = F.col(col) if isinstance(col, str) else col
-    head = F.substring(c, 1, prefix)
-    codes = F.transform(
-        F.sequence(F.lit(1), F.length(head)),
-        lambda i: F.ascii(head.substr(i, F.lit(1))),
-    )
-    return F.aggregate(
-        codes,
-        F.lit(FP_SEED).cast("long"),
-        lambda acc, x: (acc * FP_BASE + x) % FP_MOD,
-    )
+
+    def fold(head: Column) -> Column:
+        codes = F.transform(
+            F.sequence(F.lit(1), F.length(head)),
+            lambda i: F.ascii(head.substr(i, F.lit(1))),
+        )
+        return F.aggregate(
+            codes,
+            F.lit(FP_SEED).cast("long"),
+            lambda acc, x: (acc * FP_BASE + x) % FP_MOD,
+        )
+
+    return bind_once(F.substring(c, 1, prefix), fold)
 
 
 def sql_rolling_fingerprint(expr: str, prefix: int = FP_PREFIX) -> str:
-    head = f"substr({expr}, 1, {prefix})"
     codes = (
-        f"list_transform(generate_series(1, length({head})), "
-        f"i -> ascii(substr({head}, i, 1)))"
+        "list_transform(generate_series(1, length(h)), "
+        "i -> ascii(substr(h, i, 1)))"
     )
-    return (
+    return sql_bind_once(
+        f"substr({expr}, 1, {prefix})",
+        "h",
         f"list_reduce(list_prepend({FP_SEED}::BIGINT, {codes}), "
-        f"(acc, x) -> (acc * {FP_BASE} + x) % {FP_MOD})"
+        f"(acc, x) -> (acc * {FP_BASE} + x) % {FP_MOD})",
     )

@@ -8,6 +8,7 @@ identical/disjoint inputs, known hash values).
 from __future__ import annotations
 
 import datetime
+import hashlib
 
 import pytest
 
@@ -50,13 +51,65 @@ def test_minhash_identical_texts_identical_signatures(spark):
          (3, "a completely different doc here")],
         "id long, text string",
     )
-    sigs = df.select(
-        "id", dd.minhash_signature(dd.word_shingles("text")).alias("sig")
-    ).collect()
-    by_id = {r.id: r.sig for r in sigs}
-    assert len(by_id[1]) == dd.MINHASH_K
+    keys = df.select(
+        "id", dd.shingle_hashes(dd.word_shingles("text")).alias("h")
+    ).select("id", F.expr(dd.spark_lsh_band_keys_sql("h")).alias("keys"))
+    by_id = {r.id: r.keys for r in keys.collect()}
+    assert len(by_id[1]) == dd.LSH_BANDS
     assert by_id[1] == by_id[2]
     assert by_id[1] != by_id[3]
+
+    # Known values: one md5 per shingle, masked to 31 bits, then the
+    # affine permutations; a band key packs its two slot minima.
+    shingles = {"the quick brown", "quick brown fox", "brown fox jumps"}
+    xs = [int(hashlib.md5(s.encode()).hexdigest()[:8], 16) & dd.MINHASH_PRIME
+          for s in shingles]
+    sig = [min((a * x + b) % dd.MINHASH_PRIME for x in xs)
+           for a, b in dd.MINHASH_PERMS]
+    assert by_id[1] == [
+        sig[2 * band] * 2**31 + sig[2 * band + 1]
+        for band in range(dd.LSH_BANDS)
+    ]
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _synthetic_texts(spark):
+    # spark.range, not createDataFrame: a local relation would be
+    # constant-folded away by the optimizer before the plan is read.
+    return spark.range(4).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("Alpha  beta gamma delta "), F.col("id").cast("string")
+        ).alias("text"),
+    )
+
+
+def test_word_shingles_normalize_once_per_row(spark):
+    """Plan pin: the normalization and split of the text stay outside
+    the per-shingle lambda, so shingling is linear in words."""
+    docs = _synthetic_texts(spark)
+    plan = _optimized_plan(docs.select(dd.word_shingles("text").alias("sh")))
+    assert plan.count("regexp_replace(") == 1, plan
+    plan = _optimized_plan(
+        docs.select(
+            tx.rolling_fingerprint(dd.normalized_text("text")).alias("fp")
+        )
+    )
+    assert plan.count("regexp_replace(") == 1, plan
+
+
+def test_lsh_banded_projection_hashes_each_shingle_once(spark):
+    """Plan pin: the shingle hash array stays its own projection — if
+    Catalyst inlined it into the K signature lambdas, every shingle
+    would be md5-hashed K times."""
+    docs = _synthetic_texts(spark).select(
+        "doc_id", dd.word_shingles("text").alias("sh")
+    )
+    plan = _optimized_plan(dd.lsh_candidate_pairs(docs, "doc_id", "sh"))
+    assert plan.count("md5(") == 1, plan
 
 
 def test_simhash_identical_zero_hamming(spark):
@@ -1406,70 +1459,6 @@ def test_qdigest_query_bounds(spark, sf_dir):
             lo = xs[max(0, min(n - 1, int((q - 0.01) * n) - 1))]
             hi = xs[max(0, min(n - 1, int((q + 0.01) * n)))]
             assert lo <= row[col] <= hi, (flag, col, row[col])
-
-
-def test_lsh_expr_spelling_plan_identical_to_column_form(spark):
-    """r17 optimization pin: spark_lsh_band_keys_sql / the single-expr
-    pair explode (one Py4J round trip per build) must reach the SAME
-    optimized plan as the Column-API spelling they replaced — the
-    Column form's array(min_0..min_K)[idx] subscripts are folded by
-    SimplifyExtractValueOps into exactly the per-band mins the SQL
-    form spells directly, so results are identical by construction."""
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
-        schema="doc_id long, text string",
-    ).select("doc_id", dd.word_shingles("text").alias("sh"))
-
-    def canon(df):
-        return (
-            df._jdf.queryExecution().optimizedPlan().canonicalized()
-            .toString()
-        )
-
-    sig = dd.minhash_signature(F.col("sh"))
-    old_banded = docs.select(
-        "doc_id",
-        F.posexplode(dd.lsh_band_keys(sig)).alias("band_id", "band_key"),
-    )
-    new_banded = docs.select(
-        "doc_id",
-        F.posexplode(F.expr(dd.spark_lsh_band_keys_sql("sh"))).alias(
-            "band_id", "band_key"
-        ),
-    )
-    assert canon(old_banded) == canon(new_banded)
-
-    buckets = (
-        old_banded.groupBy("band_id", "band_key")
-        .agg(F.collect_list("doc_id").alias("__ids"))
-        .filter((F.size("__ids") >= 2) & (F.size("__ids") <= 64))
-    )
-    ids = F.col("__ids")
-    old_pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x: F.transform(
-                F.filter(ids, lambda y: y > x),
-                lambda y: F.struct(x.alias("id1"), y.alias("id2")),
-            ),
-        )
-    )
-    new_pairs = F.expr(
-        "flatten(transform(__ids, x -> "
-        "transform(filter(__ids, y -> y > x), "
-        "y -> struct(x AS id1, y AS id2))))"
-    )
-
-    def pairs_df(col):
-        return (
-            buckets.select(F.explode(col).alias("__p"))
-            .select(
-                F.col("__p.id1").alias("id1"), F.col("__p.id2").alias("id2")
-            )
-            .distinct()
-        )
-
-    assert canon(pairs_df(old_pairs)) == canon(pairs_df(new_pairs))
 
 
 def test_similarity_expr_spelling_plan_identical_to_column_form(spark):
